@@ -10,7 +10,7 @@ import os
 os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 from etl_builder_spark.session import get_spark, load_table
 from etl_builder_spark.llm.embed_dedup import _planted, SEM_CENT_LO, SEM_N_CENT, EMBED_DUP_TAU
-from etl_builder_spark.llm.similarity import dot as _dot, norm as _norm
+from etl_builder_spark.llm.similarity import dot_sql, norm_sql
 from pyspark.sql import functions as F
 
 spark = get_spark("ab", shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "8")))
@@ -24,20 +24,20 @@ def build(variant):
     all_vecs = e.unionByName(_planted(e))
     cent = e.where(F.col("vec_id").between(SEM_CENT_LO, SEM_CENT_LO + SEM_N_CENT - 1)).select(
         (F.col("vec_id") - SEM_CENT_LO).alias("cluster_id"), F.col("v").alias("cv"))
-    av = all_vecs.select("vec_id", "v", _norm(F.col("v")).alias("nv"))
-    cn = cent.select("cluster_id", "cv", _norm(F.col("cv")).alias("ncv"))
+    av = all_vecs.select("vec_id", "v", F.expr(norm_sql("v")).alias("nv"))
+    cn = cent.select("cluster_id", "cv", F.expr(norm_sql("cv")).alias("ncv"))
     asg = (av.crossJoin(F.broadcast(cn))
-        .withColumn("negc", -F.round(_dot(F.col("v"), F.col("cv")) / (F.col("nv") * F.col("ncv")), 6))
+        .withColumn("negc", F.expr(f"-ROUND({dot_sql('v', 'cv')} / (nv * ncv), 6)"))
         .groupBy("vec_id").agg(F.min(F.struct(F.col("negc"), F.col("cluster_id"))).alias("b"),
                                F.first("v").alias("v"))
         .select("vec_id", "v", F.col("b.cluster_id").alias("cluster_id")))
-    asg = asg.withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v")))).persist()
+    asg = asg.withColumn("nrm", F.expr(norm_sql("v"))).persist()
     x = asg.select("cluster_id", F.col("vec_id").alias("keep_id"), F.col("v").alias("xv"),
                    F.col("nrm").alias("nx"))
     y = asg.select("cluster_id", F.col("vec_id").alias("drop_id"), F.col("v").alias("yv"),
                    F.col("nrm").alias("ny"))
     if variant == "A":
-        sim = F.round(_dot(F.col("xv"), F.col("yv")) / (F.col("nx") * F.col("ny")), 6)
+        sim = F.expr(f"ROUND({dot_sql('xv', 'yv')} / (nx * ny), 6)")
     else:
         unrolled = "0.0D + " + " + ".join(f"xv[{i}]*yv[{i}]" for i in range(64))
         sim = F.expr(f"round(({unrolled}) / (nx * ny), 6)")

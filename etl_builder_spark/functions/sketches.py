@@ -61,9 +61,42 @@ def sketch_hll_users(spark, sf_dir) -> DataFrame:
 #: pinned universal-hash rows for the exact count-min twin: depth 4,
 #: width 64, (a, b) constants shared literally with the oracle (the
 #: dedup_minhash_exact discipline applied to frequency sketching).
+#: CM_P is also the modulus of every char-poly string hash and MinHash /
+#: SimHash permutation in the package.
 CM_P = 1_000_000_007
 CM_WIDTH = 64
 CM_PERMS: tuple[tuple[int, int], ...] = ((31, 7), (131, 13), (571, 23), (1019, 41))
+
+
+def char_codes_sql(col: str) -> str:
+    """Non-zero character codes of a string column, as array<bigint>."""
+    return f"filter(transform(split({col}, ''), c -> CAST(ascii(c) AS BIGINT)), x -> x > 0)"
+
+
+def char_poly_hash_sql(col: str) -> str:
+    """Polynomial rolling hash (base 31 mod CM_P) over the character
+    codes, built as SQL text (the similarity.dot_sql rationale).  The
+    per-step mod keeps every intermediate < 2^35, so no overflow-wrap
+    semantics are involved (DuckDB would error on BIGINT overflow where
+    the JVM wraps)."""
+    return f"aggregate({char_codes_sql(col)}, CAST(0 AS BIGINT), (a, x) -> (a * 31 + x) % {CM_P})"
+
+
+def char_codes_oracle(col: str) -> str:
+    """DuckDB twin of :func:`char_codes_sql`."""
+    return (
+        f"list_transform(list_filter(string_split_regex({col}, ''), c -> c <> ''),"
+        " c -> CAST(unicode(c) AS BIGINT))"
+    )
+
+
+def char_poly_hash_oracle(col: str) -> str:
+    """DuckDB twin of :func:`char_poly_hash_sql`: list_reduce over the
+    codes with the 0 seed prepended — the same left fold."""
+    return (
+        f"list_reduce(list_prepend(CAST(0 AS BIGINT), {char_codes_oracle(col)}),"
+        f" (a, b) -> (a * 31 + b) % {CM_P})"
+    )
 
 
 @register(
@@ -79,11 +112,7 @@ CM_PERMS: tuple[tuple[int, int], ...] = ((31, 7), (131, 13), (571, 23), (1019, 4
         ),
         hashed AS (
             SELECT token, n,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                       list_transform(
-                           list_filter(string_split_regex(token, ''), c -> c <> ''),
-                           c -> CAST(unicode(c) AS BIGINT))),
-                       (a, b) -> (a * 31 + b) % {CM_P}) AS h
+                   {char_poly_hash_oracle('token')} AS h
             FROM tf
         ),
         perms(d, a, b) AS (VALUES {", ".join(f"({d}, {a}, {b})" for d, (a, b) in enumerate(CM_PERMS))}),
@@ -129,11 +158,7 @@ def sketch_count_min_exact(spark, sf_dir):
         F.explode(F.split(fold_lower(F.col("text")), " ")).alias("token")
     ).where(F.col("token") != "")
     tf = toks.groupBy("token").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    codes = F.filter(
-        F.transform(F.split("token", ""), lambda c: F.ascii(c).cast("long")),
-        lambda x: x > 0,
-    )
-    h = F.aggregate(codes, F.lit(0).cast("long"), lambda a, x: (a * 31 + x) % CM_P)
+    h = F.expr(char_poly_hash_sql("token"))
     hashed = tf.select("token", "n", h.alias("h")).persist()
     perms = spark.createDataFrame(
         [(dd, a, b) for dd, (a, b) in enumerate(CM_PERMS)], "d long, a long, b long"
@@ -188,11 +213,7 @@ BLOOM_M = 256
         perms(d, a, b) AS (VALUES {", ".join(f"({d}, {a}, {b})" for d, (a, b) in enumerate(CM_PERMS))}),
         hashed AS (
             SELECT token,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                       list_transform(
-                           list_filter(string_split_regex(token, ''), c -> c <> ''),
-                           c -> CAST(unicode(c) AS BIGINT))),
-                       (a, b) -> (a * 31 + b) % {CM_P}) AS h
+                   {char_poly_hash_oracle('token')} AS h
             FROM corpus
         ),
         bits AS (
@@ -209,11 +230,7 @@ BLOOM_M = 256
         ),
         phash AS (
             SELECT token, in_corpus,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                       list_transform(
-                           list_filter(string_split_regex(token, ''), c -> c <> ''),
-                           c -> CAST(unicode(c) AS BIGINT))),
-                       (a, b) -> (a * 31 + b) % {CM_P}) AS h
+                   {char_poly_hash_oracle('token')} AS h
             FROM probes
         ),
         hits AS (
@@ -253,11 +270,7 @@ def sketch_bloom_exact(spark, sf_dir):
         .distinct()
         .persist()
     )
-    codes = F.filter(
-        F.transform(F.split("token", ""), lambda c: F.ascii(c).cast("long")),
-        lambda x: x > 0,
-    )
-    h = F.aggregate(codes, F.lit(0).cast("long"), lambda a, x: (a * 31 + x) % CM_P)
+    h = F.expr(char_poly_hash_sql("token"))
     perms = spark.createDataFrame(
         [(dd, a, b) for dd, (a, b) in enumerate(CM_PERMS)], "d long, a long, b long"
     )

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_builder_spark.folding import fold_lower, fold_upper
+from etl_builder_spark.functions.sketches import CM_P, char_poly_hash_oracle, char_poly_hash_sql
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
@@ -202,7 +203,6 @@ def dedup_ngram_jaccard(spark, sf_dir):
 #: and the DuckDB oracle share literal constants.
 import random as _random
 
-_P = 1_000_000_007
 _rng = _random.Random(7)
 MINHASH_PERMS: tuple[tuple[int, int], ...] = tuple(
     (_rng.randrange(1, 10**9), _rng.randrange(0, 10**9)) for _ in range(16)
@@ -230,16 +230,13 @@ def _minhash_sig_bands(everything):
         .select("doc_id", F.explode(grams).alias("sh"))
         .distinct()
     )
-    h = F.expr(
-        "aggregate(filter(transform(split(sh, ''), c -> CAST(ascii(c) AS BIGINT)),"
-        f" x -> x > 0), CAST(0 AS BIGINT), (a, x) -> (a * 31 + x) % {_P})"
-    )
+    h = F.expr(char_poly_hash_sql("sh"))
     sh_hash = shingles.select("doc_id", h.alias("h"))
     # the 16 permuted minima build as SQL text — one parse per
     # aggregate instead of per-perm Column-API py4j crossings (r15,
     # same rationale as the simhash/sign-LSH constructors)
     mins = [
-        F.expr(f"min(({a} * h + {b}) % {_P})").alias(f"m{i}")
+        F.expr(f"min(({a} * h + {b}) % {CM_P})").alias(f"m{i}")
         for i, (a, b) in enumerate(MINHASH_PERMS)
     ]
     sig_wide = sh_hash.groupBy("doc_id").agg(*mins)
@@ -254,7 +251,7 @@ def _minhash_sig_bands(everything):
     )
     bands = (
         sig.groupBy("doc_id", (F.col("i") / 4).cast("long").alias("band"))
-        .agg((F.sum((F.col("minh") * pow31) % _P) % _P).alias("bh"))
+        .agg((F.sum((F.col("minh") * pow31) % CM_P) % CM_P).alias("bh"))
         .persist()
     )
     # both frames are multi-referenced by every caller (bands is
@@ -285,16 +282,12 @@ def _minhash_sig_bands(everything):
         ),
         sh_hash AS (
             SELECT doc_id,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                       list_transform(
-                           list_filter(string_split_regex(sh, ''), c -> c <> ''),
-                           c -> CAST(unicode(c) AS BIGINT))),
-                       (a, b) -> (a * 31 + b) % {_P}) AS h
+                   {char_poly_hash_oracle('sh')} AS h
             FROM shingles
         ),
         perms(i, a, b) AS (VALUES {", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(MINHASH_PERMS))}),
         sig AS (
-            SELECT doc_id, i, MIN((a * h + b) % {_P}) AS minh
+            SELECT doc_id, i, MIN((a * h + b) % {CM_P}) AS minh
             FROM sh_hash CROSS JOIN perms
             GROUP BY doc_id, i
         ),
@@ -304,8 +297,8 @@ def _minhash_sig_bands(everything):
             -- differently from Spark's truncating cast)
             SELECT doc_id, i // 4 AS band,
                    SUM((minh * CASE i % 4 WHEN 0 THEN 1 WHEN 1 THEN 31
-                                          WHEN 2 THEN 961 ELSE 29791 END) % {_P})
-                       % {_P} AS bh
+                                          WHEN 2 THEN 961 ELSE 29791 END) % {CM_P})
+                       % {CM_P} AS bh
             FROM sig GROUP BY doc_id, band
         ),
         cand AS (
@@ -417,24 +410,20 @@ INC_SLICE_MAX = 300
         ),
         sh_hash AS (
             SELECT doc_id,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                       list_transform(
-                           list_filter(string_split_regex(sh, ''), c -> c <> ''),
-                           c -> CAST(unicode(c) AS BIGINT))),
-                       (a, b) -> (a * 31 + b) % {_P}) AS h
+                   {char_poly_hash_oracle('sh')} AS h
             FROM shingles
         ),
         perms(i, a, b) AS (VALUES {", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(MINHASH_PERMS))}),
         sig AS (
-            SELECT doc_id, i, MIN((a * h + b) % {_P}) AS minh
+            SELECT doc_id, i, MIN((a * h + b) % {CM_P}) AS minh
             FROM sh_hash CROSS JOIN perms
             GROUP BY doc_id, i
         ),
         bands AS (
             SELECT doc_id, i // 4 AS band,
                    SUM((minh * CASE i % 4 WHEN 0 THEN 1 WHEN 1 THEN 31
-                                          WHEN 2 THEN 961 ELSE 29791 END) % {_P})
-                       % {_P} AS bh
+                                          WHEN 2 THEN 961 ELSE 29791 END) % {CM_P})
+                       % {CM_P} AS bh
             FROM sig GROUP BY doc_id, band
         ),
         cand AS (
@@ -654,17 +643,13 @@ SIMHASH_HAM_MAX = 3
         ),
         th AS (
             SELECT doc_id, w,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                       list_transform(
-                           list_filter(string_split_regex(token, ''), c -> c <> ''),
-                           c -> CAST(unicode(c) AS BIGINT))),
-                       (a, b) -> (a * 31 + b) % {_P}) AS h
+                   {char_poly_hash_oracle('token')} AS h
             FROM tok
         ),
         perms(i, a, b) AS (VALUES {", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(SIMHASH_PERMS))}),
         votes AS (
             SELECT doc_id, i,
-                   SUM(w * (2 * (((a * h + b) % {_P}) % 2) - 1)) AS v
+                   SUM(w * (2 * (((a * h + b) % {CM_P}) % 2) - 1)) AS v
             FROM th CROSS JOIN perms GROUP BY doc_id, i
         ),
         fp AS (
@@ -725,10 +710,7 @@ def dedup_simhash_exact(spark, sf_dir):
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    codes = F.filter(
-        F.transform(F.split("token", ""), lambda c: F.ascii(c).cast("long")), lambda x: x > 0
-    )
-    h = F.aggregate(codes, F.lit(0).cast("long"), lambda a, x: (a * 31 + x) % _P)
+    h = F.expr(char_poly_hash_sql("token"))
     th = tok.select("doc_id", "w", h.alias("h"))
     # the 48-expression families build as SQL text — ONE parse per
     # column instead of ~12 py4j Column-API crossings per bit (r15,
@@ -737,7 +719,7 @@ def dedup_simhash_exact(spark, sf_dir):
     # Column form exactly (INT * BIGINT arithmetic, BIGINT bit values)
     votes = [
         F.expr(
-            f"sum(w * (2 * ((({a} * h + {b}) % {_P}) % 2) - 1))"
+            f"sum(w * (2 * ((({a} * h + {b}) % {CM_P}) % 2) - 1))"
         ).alias(f"v{i}")
         for i, (a, b) in enumerate(SIMHASH_PERMS)
     ]
@@ -1001,24 +983,20 @@ def dedup_token_sort(spark, sf_dir):
         ),
         sh_hash AS (
             SELECT doc_id,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                       list_transform(
-                           list_filter(string_split_regex(sh, ''), c -> c <> ''),
-                           c -> CAST(unicode(c) AS BIGINT))),
-                       (a, b) -> (a * 31 + b) % {_P}) AS h
+                   {char_poly_hash_oracle('sh')} AS h
             FROM shingles
         ),
         perms(i, a, b) AS (VALUES {", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(MINHASH_PERMS))}),
         sig AS (
-            SELECT doc_id, i, MIN((a * h + b) % {_P}) AS minh
+            SELECT doc_id, i, MIN((a * h + b) % {CM_P}) AS minh
             FROM sh_hash CROSS JOIN perms
             GROUP BY doc_id, i
         ),
         bands AS (
             SELECT doc_id, i // 4 AS band,
                    SUM((minh * CASE i % 4 WHEN 0 THEN 1 WHEN 1 THEN 31
-                                          WHEN 2 THEN 961 ELSE 29791 END) % {_P})
-                       % {_P} AS bh
+                                          WHEN 2 THEN 961 ELSE 29791 END) % {CM_P})
+                       % {CM_P} AS bh
             FROM sig GROUP BY doc_id, band
         ),
         cand AS (
@@ -1213,24 +1191,20 @@ def dedup_cluster_size_histogram(spark, sf_dir):
         ),
         sh_hash AS (
             SELECT doc_id,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                       list_transform(
-                           list_filter(string_split_regex(sh, ''), c -> c <> ''),
-                           c -> CAST(unicode(c) AS BIGINT))),
-                       (a, b) -> (a * 31 + b) % {_P}) AS h
+                   {char_poly_hash_oracle('sh')} AS h
             FROM shingles
         ),
         perms(i, a, b) AS (VALUES {", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(MINHASH_PERMS))}),
         sig AS (
-            SELECT doc_id, i, MIN((a * h + b) % {_P}) AS minh
+            SELECT doc_id, i, MIN((a * h + b) % {CM_P}) AS minh
             FROM sh_hash CROSS JOIN perms
             GROUP BY doc_id, i
         ),
         bands AS (
             SELECT doc_id, i // 4 AS band,
                    SUM((minh * CASE i % 4 WHEN 0 THEN 1 WHEN 1 THEN 31
-                                          WHEN 2 THEN 961 ELSE 29791 END) % {_P})
-                       % {_P} AS bh
+                                          WHEN 2 THEN 961 ELSE 29791 END) % {CM_P})
+                       % {CM_P} AS bh
             FROM sig GROUP BY doc_id, band
         ),
         cand AS (

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_builder_spark.llm.similarity import _dbl, cosine, dot, dot_sql
+from etl_builder_spark.llm.similarity import _dbl, dot_sql, norm_sql
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
@@ -277,10 +277,10 @@ def dedup_embedding_cosine(spark, sf_dir):
     # higher-order-function work on the candidate fan-out, the
     # operator's hot loop. At scale norms would be stored with the
     # vectors (the standard layout) and this join disappears.
-    norms = all_vecs.withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v")))).persist()
+    norms = all_vecs.withColumn("nrm", F.expr(norm_sql("v"))).persist()
     va = norms.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     vb = norms.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    sim = F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6)
+    sim = F.expr(f"ROUND({dot_sql('va', 'vb')} / (na * nb), 6)")
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
@@ -408,19 +408,13 @@ def dedup_semantic_centroids(spark, sf_dir):
     # (negating the rounded double is exact), but with map-side combine
     # instead of a row_number sort over the ×16 broadcast expansion
     # (the pq_encode lesson, VERDICT r4 item 4).
-    # norms hoisted out of the ×16 crossJoin too (similarity.norm —
+    # norms hoisted out of the ×16 crossJoin too (similarity.norm_sql —
     # bit-identical; r15): one dot per (vec, centroid) pair
-    from etl_builder_spark.llm.similarity import dot as _dot
-    from etl_builder_spark.llm.similarity import norm as _norm
-
-    av = all_vecs.select("vec_id", "v", _norm(F.col("v")).alias("nv"))
-    cn = cent.select("cluster_id", "cv", _norm(F.col("cv")).alias("ncv"))
+    av = all_vecs.select("vec_id", "v", F.expr(norm_sql("v")).alias("nv"))
+    cn = cent.select("cluster_id", "cv", F.expr(norm_sql("cv")).alias("ncv"))
     asg = (
         av.crossJoin(F.broadcast(cn))
-        .withColumn(
-            "negc",
-            -F.round(_dot(F.col("v"), F.col("cv")) / (F.col("nv") * F.col("ncv")), 6),
-        )
+        .withColumn("negc", F.expr(f"-ROUND({dot_sql('v', 'cv')} / (nv * ncv), 6)"))
         .groupBy("vec_id")
         .agg(
             F.min(F.struct(F.col("negc"), F.col("cluster_id"))).alias("b"),
@@ -433,14 +427,14 @@ def dedup_semantic_centroids(spark, sf_dir):
     # remains a per-pair array aggregate
     # asg is self-joined into the pair fan-out below — persist so the
     # 16-centroid assignment scan runs once, not once per join side
-    asg = asg.withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v")))).persist()
+    asg = asg.withColumn("nrm", F.expr(norm_sql("v"))).persist()
     x = asg.select(
         "cluster_id", F.col("vec_id").alias("keep_id"), F.col("v").alias("xv"), F.col("nrm").alias("nx")
     )
     y = asg.select(
         "cluster_id", F.col("vec_id").alias("drop_id"), F.col("v").alias("yv"), F.col("nrm").alias("ny")
     )
-    sim = F.round(dot(F.col("xv"), F.col("yv")) / (F.col("nx") * F.col("ny")), 6)
+    sim = F.expr(f"ROUND({dot_sql('xv', 'yv')} / (nx * ny), 6)")
     return (
         x.join(y, "cluster_id")
         .where(F.col("keep_id") < F.col("drop_id"))

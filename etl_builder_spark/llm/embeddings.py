@@ -15,15 +15,11 @@ driver-hashable output (§7.2.8).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from etl_builder_spark.llm.similarity import norm_sql
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
-
-
-def l2_norm(v: Column) -> Column:
-    return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
 @register(
@@ -59,7 +55,7 @@ def embed_normalize_quantize(spark, sf_dir):
     # element (O(d²)/row) unless Catalyst happens to subexpress it
     base = e.select(
         "vec_id", F.size("embedding").cast("long").alias("dim"), v.alias("v")
-    ).withColumn("norm", l2_norm(F.col("v")))
+    ).withColumn("norm", F.expr(norm_sql("v")))
     q8 = F.transform(
         F.col("v"),
         lambda x: F.floor(

@@ -20,7 +20,7 @@ import math as _math
 from pyspark.sql import functions as F
 from etl_builder_spark.folding import nan_to_null
 
-from etl_builder_spark.llm.similarity import _dbl
+from etl_builder_spark.llm.similarity import _dbl, cosine_sql, dot_sql, sq_dist_sql
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
@@ -97,11 +97,7 @@ def ml_confusion_matrix(spark, sf_dir):
     scored = e.select("vec_id", F.col("label").alias("true_label"), _dbl().alias("v")).crossJoin(
         F.broadcast(cent)
     )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v"), F.col("c"), lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = F.expr(sq_dist_sql("v", "c"))
     pred = (
         scored.select("vec_id", "true_label", "cand", F.round(d2, 9).alias("d9"))
         .groupBy("vec_id", "true_label")
@@ -187,11 +183,7 @@ def ml_auc_one_vs_rest(spark, sf_dir):
             F.array_sort(F.collect_list(F.struct("pos0", "cv"))), lambda s: s["cv"]
         ).alias("c")
     )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v"), F.col("c"), lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = F.expr(sq_dist_sql("v", "c"))
     scored = (
         e.select("vec_id", F.col("label").alias("true_label"), _dbl().alias("v"))
         .crossJoin(F.broadcast(cent))
@@ -370,11 +362,7 @@ def ml_lift_gain_deciles(spark, sf_dir):
             ).alias("c")
         )
     )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v"), F.col("c"), lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = F.expr(sq_dist_sql("v", "c"))
     scored = (
         e.select("vec_id", (F.col("label") == 3).alias("is_pos"), _dbl().alias("v"))
         .crossJoin(F.broadcast(cent))
@@ -531,12 +519,7 @@ def ml_pca_power_component(spark, sf_dir):
     u = n2 = None
     for _ in range(PCA_ITERS):
         s = xc.crossJoin(F.broadcast(v_frame)).select(
-            "x",
-            F.aggregate(
-                F.zip_with(F.col("x"), F.col("v"), lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            ).alias("s"),
+            "x", F.expr(dot_sql("x", "v")).alias("s")
         )
         u = (
             s.select(F.posexplode("x").alias("pos0", "xij"), "s")
@@ -665,11 +648,7 @@ def ml_kmeans_lloyd_exact(spark, sf_dir):
     cent = x.where(F.col("vec_id") < KMEANS_K).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("c")
     )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
+    d2 = F.expr(sq_dist_sql("v", "c"))
 
     def assign(centroids, carry_v=False):
         # carry_v threads the vector THROUGH the argmin struct (r15,
@@ -1056,11 +1035,7 @@ def ml_lift_gain_deciles_bucketed(spark, sf_dir):
             ).alias("c")
         )
     )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v"), F.col("c"), lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = F.expr(sq_dist_sql("v", "c"))
     scored = (
         e.select("vec_id", (F.col("label") == 3).alias("is_pos"), _dbl().alias("v"))
         .crossJoin(F.broadcast(cent))
@@ -1169,8 +1144,6 @@ def ml_calibration_bins(spark, sf_dir):
     per-bin mean scores sum 9-dp-rounded DECIMALs so the aggregation
     is order-free (policy §7.2).  Empty bins are absent rows (honest:
     a reliability diagram can't say anything where there's no mass)."""
-    from etl_builder_spark.llm.similarity import cosine
-
     e = load_table(spark, sf_dir, "embeddings")
     cent = (
         e.where(F.col("label") == 3)
@@ -1183,7 +1156,7 @@ def ml_calibration_bins(spark, sf_dir):
             ).alias("c")
         )
     )
-    p = F.round((F.round(cosine(F.col("v"), F.col("c")), 6) + 1) / 2, 9)
+    p = F.expr(f"ROUND((ROUND({cosine_sql('v', 'c')}, 6) + 1) / 2, 9)")
     binned = (
         e.select((F.col("label") == 3).alias("is_pos"), _dbl().alias("v"))
         .crossJoin(F.broadcast(cent))
@@ -1785,11 +1758,7 @@ def ml_pr_threshold_grid(spark, sf_dir):
             ).alias("c")
         )
     )
-    d2 = F.aggregate(
-        F.zip_with(_dbl(), F.col("c"), lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = F.expr(sq_dist_sql("transform(embedding, x -> CAST(x AS DOUBLE))", "c"))
     scored = e.crossJoin(F.broadcast(cent_vec)).select(
         (F.col("label") == 0).alias("is_pos"), F.round(d2, 9).alias("d9")
     )
@@ -2102,11 +2071,7 @@ def ml_silhouette_labels(spark, sf_dir):
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
     )
     a, b = vecs.alias("a"), vecs.alias("b")
-    d2 = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = F.expr(sq_dist_sql("a.v", "b.v"))
     dists = a.join(b, F.col("a.vec_id") != F.col("b.vec_id")).select(
         F.col("a.vec_id").alias("i"),
         F.col("a.label").alias("la"),
@@ -2205,12 +2170,11 @@ def ml_kmeans_pp_seeding(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
     def d2(vcol, ccol):
-        return F.aggregate(
-            F.zip_with(
-                _dbl(vcol), _dbl(ccol), lambda x, c: (x - c) * (x - c)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+        return F.expr(
+            sq_dist_sql(
+                f"transform({vcol}, x -> CAST(x AS DOUBLE))",
+                f"transform({ccol}, x -> CAST(x AS DOUBLE))",
+            )
         )
 
     c1 = e.orderBy("vec_id").limit(1).select(

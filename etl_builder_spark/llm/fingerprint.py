@@ -10,14 +10,18 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_builder_spark.folding import fold_lower
+from etl_builder_spark.functions.sketches import (
+    char_codes_oracle,
+    char_codes_sql,
+    char_poly_hash_oracle,
+    char_poly_hash_sql,
+)
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
 #: BPE-ish pretokenizer: letter runs, digit runs, single punctuation.
 #: Space class is explicit (corpus is ASCII) — avoids \s dialect drift.
 BPE_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
-
-MOD = 1_000_000_007
 
 
 @register(
@@ -50,18 +54,10 @@ def text_token_bpeish(spark, sf_dir):
 @register(
     "doc_fingerprint",
     oracle=f"""
-        WITH codes AS (
-            SELECT doc_id,
-                   list_transform(
-                       list_filter(string_split_regex(text, ''), c -> c <> ''),
-                       c -> CAST(unicode(c) AS BIGINT)) AS cs
-            FROM documents
-        )
         SELECT doc_id,
-               list_reduce(list_prepend(CAST(0 AS BIGINT), cs),
-                           (a, b) -> (a * 31 + b) % {MOD}) AS fingerprint,
-               len(cs) AS n_chars_hashed
-        FROM codes
+               {char_poly_hash_oracle('text')} AS fingerprint,
+               len({char_codes_oracle('text')}) AS n_chars_hashed
+        FROM documents
     """,
     tags=("I-fingerprint",),
 )
@@ -72,15 +68,10 @@ def doc_fingerprint(spark, sf_dir):
     overflow-wrap semantics are involved (DuckDB would error on BIGINT
     overflow where the JVM wraps)."""
     d = load_table(spark, sf_dir, "documents")
-    codes = F.filter(
-        F.transform(F.split("text", ""), lambda c: F.ascii(c).cast("long")),
-        lambda x: x > 0,
-    )
-    fp = F.aggregate(codes, F.lit(0).cast("long"), lambda a, x: (a * 31 + x) % MOD)
     return d.select(
         "doc_id",
-        fp.alias("fingerprint"),
-        F.size(codes).alias("n_chars_hashed"),
+        F.expr(char_poly_hash_sql("text")).alias("fingerprint"),
+        F.expr(f"size({char_codes_sql('text')})").alias("n_chars_hashed"),
     )
 
 

@@ -18,24 +18,12 @@ search (no per-row Python).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_builder_spark.llm.similarity import _dbl
+from etl_builder_spark.llm.similarity import _dbl, dot_sql, norm_sql, sq_dist_sql
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
-
-
-def _sq_dist(a: Column, b: Column) -> Column:
-    diff = F.zip_with(a, b, lambda x, y: x - y)
-    return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x)
-
-
-def _sq_dist_sql(a: str, b: str) -> str:
-    """SQL-text twin of :func:`_sq_dist` (r16, the dot_sql rationale):
-    one parsed string instead of ~25 py4j crossings per lambda pair;
-    same zip_with/aggregate Catalyst operators."""
-    return f"aggregate(zip_with({a}, {b}, (x, y) -> x - y), 0.0D, (acc, x) -> acc + x * x)"
 
 
 def train_quantizer(vectors: DataFrame, vec_col: str = "v", k: int = 16, seed: int = 42) -> DataFrame:
@@ -83,7 +71,7 @@ def assign_clusters(vectors: DataFrame, centroids: DataFrame, vec_col: str = "v"
     corpus through a row_number window (the pq_encode lesson,
     VERDICT r4 item 4).  ``vec_col`` is group-constant, so ``first``
     is deterministic here."""
-    d2 = F.expr(_sq_dist_sql(vec_col, "cv"))
+    d2 = F.expr(sq_dist_sql(vec_col, "cv"))
     return (
         vectors.crossJoin(F.broadcast(centroids))
         .withColumn("d2r", F.round(d2, 9))
@@ -107,21 +95,19 @@ def ivf_topk(
     lists, brute-force only inside them."""
     pc = probes.crossJoin(F.broadcast(centroids))
     w = Window.partitionBy("probe_id").orderBy(
-        F.expr(f"ROUND({_sq_dist_sql('pv', 'cv')}, 9)").asc(), F.col("cluster_id")
+        F.expr(f"ROUND({sq_dist_sql('pv', 'cv')}, 9)").asc(), F.col("cluster_id")
     )
     probe_lists = (
         pc.withColumn("crn", F.row_number().over(w)).where(F.col("crn") <= n_probe)
         .select("probe_id", "pv", "cluster_id")
     )
     # norms hoisted to per-row columns before the candidate fan-out
-    # (r15, similarity.norm rationale): the probe norm folds once per
+    # (r15, similarity.norm_sql rationale): the probe norm folds once per
     # probe list row and the index norm once per indexed row; the pair
     # pays one dot.  sqrt(dot(a,a))*sqrt(dot(b,b)) evaluates
     # identically either way.  Dunder-prefixed internal names so a
     # caller-supplied frame that already carries nv/npv is never
     # silently overwritten (ADVICE r15).
-    from etl_builder_spark.llm.similarity import dot_sql, norm_sql
-
     probe_lists = probe_lists.withColumn("__ivf_npv", F.expr(norm_sql("pv")))
     indexed = indexed.withColumn("__ivf_nv", F.expr(norm_sql("v")))
     cands = probe_lists.join(indexed, "cluster_id").where(F.col("vec_id") != F.col("probe_id"))
@@ -231,15 +217,13 @@ def sim_knn_ivf_exact(spark, sf_dir):
     # ORDER BY cos_r DESC, cluster_id (negating the rounded double is
     # exact), but with map-side combine instead of a row_number sort
     # over the ×16 broadcast expansion (the pq_encode lesson).
-    # norms hoisted out of every cosine pairing (similarity.norm —
+    # norms hoisted out of every cosine pairing (similarity.norm_sql —
     # bit-identical): the ×16 assignment crossJoin and the probe×list
     # candidate scoring each pay one dot per pair; nv rides the argmin
     # group (every row of a vec_id group carries the same v/nv, so
     # first() is value-deterministic, same as the existing v carry).
     # HOF expressions build as SQL text (r16, dot_sql rationale): the
     # Column-API lambdas cost ~0.3 s of py4j round trips per build.
-    from etl_builder_spark.llm.similarity import dot_sql, norm_sql
-
     en = e.select("vec_id", "v", F.expr(norm_sql("v")).alias("nv"))
     cn = centroids.select("cluster_id", "cv", F.expr(norm_sql("cv")).alias("ncv"))
     asg = (

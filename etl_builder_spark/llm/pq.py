@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_builder_spark.llm.similarity import _dbl
+from etl_builder_spark.llm.similarity import _dbl, cosine_sql, dot_sql, norm_sql, sq_dist_sql
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
@@ -152,33 +152,12 @@ def _pinned_codebook_from(e: DataFrame, m: int = M_SUBSPACES) -> DataFrame:
     )
 
 
-def _sq_dist(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x - y), F.lit(0.0), lambda acc, x: acc + x * x
-    )
-
-
-def _sq_dist_sql(a: str, b: str) -> str:
-    """SQL-text twin of :func:`_sq_dist` (r16, the dot_sql rationale —
-    guide §4's boundary lesson on the DRIVER side): each Column-API
-    higher-order pair costs ~25 py4j crossings per build; one parsed
-    string yields the same zip_with/aggregate Catalyst operators
-    (0.0D is the double literal F.lit(0.0) builds)."""
-    return f"aggregate(zip_with({a}, {b}, (x, y) -> x - y), 0.0D, (acc, x) -> acc + x * x)"
-
-
-def _subvec_sql(v: str) -> str:
-    """SQL-text twin of :func:`_subvec` — start/length from the joined
-    codebook row's own (subspace, size(cv)), identical tree."""
-    return f"slice({v}, subspace * size(cv) + 1, size(cv))"
-
-
 #: Subvector slice aligned to the codebook row itself: start/length come
 #: from the joined row's own (subspace, size(cv)), so encoding follows
 #: whatever m the codebook was trained at — a codebook trained at m≠8
 #: slices correctly instead of silently mis-slicing (ADVICE r3).
-def _subvec(vec_col):
-    return F.slice(F.col(vec_col), F.col("subspace") * F.size("cv") + 1, F.size("cv"))
+def _subvec_sql(v: str) -> str:
+    return f"slice({v}, subspace * size(cv) + 1, size(cv))"
 
 
 def pq_encode(vectors: DataFrame, codebook: DataFrame, vec_col: str = "v") -> DataFrame:
@@ -196,7 +175,7 @@ def pq_encode(vectors: DataFrame, codebook: DataFrame, vec_col: str = "v") -> Da
     100 TB that is k× shuffle volume on the encode of every vector
     (VERDICT r4 item 4); the groupBy form combines the expansion away
     before any exchange and leaves no Window node in the encode plan."""
-    d2 = F.expr(_sq_dist_sql(_subvec_sql(vec_col), "cv"))
+    d2 = F.expr(sq_dist_sql(_subvec_sql(vec_col), "cv"))
     best = (
         vectors.crossJoin(F.broadcast(codebook))
         .withColumn("d2", d2)
@@ -250,7 +229,7 @@ def _adc_scored(codes: DataFrame, codebook: DataFrame, probes: DataFrame) -> Dat
             # rounded-then-DECIMAL partial distances: the m-way sum below
             # must be order-free for the exact-twin hash (policy §7.2)
             F.expr(
-                f"CAST(ROUND({_sq_dist_sql(_subvec_sql('pv'), 'cv')}, 9)"
+                f"CAST(ROUND({sq_dist_sql(_subvec_sql('pv'), 'cv')}, 9)"
                 " AS DECIMAL(20,9))"
             ).alias("pd2"),
         )
@@ -341,7 +320,7 @@ def sim_topk_pq_rerank(spark, sf_dir):
         .join(e, "vec_id")
         .join(F.broadcast(probes), "probe_id")
     )
-    exact_d2 = F.expr(_sq_dist_sql("pv", "v"))
+    exact_d2 = F.expr(sq_dist_sql("pv", "v"))
     wk = Window.partitionBy("probe_id").orderBy(F.col("exact_dist").asc(), "vec_id")
     return (
         rerank.select("probe_id", "vec_id", F.round(exact_d2, 6).alias("exact_dist"))
@@ -393,7 +372,6 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str, cb: DataFrame | None = None) -
     multi-query sessions spill rather than OOM; bench.py clearCache()s
     after its matrix."""
     from etl_builder_spark.llm.ivf import IVF_SEED_LO, IVF_SEED_HI
-    from etl_builder_spark.llm.similarity import cosine_sql, dot_sql, norm_sql
 
     n_probe, shortlist_k, k_final = 4, 50, 10
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
@@ -403,7 +381,7 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str, cb: DataFrame | None = None) -
         (F.col("vec_id") - IVF_SEED_LO).alias("cluster_id"), F.col("v").alias("cv")
     )
     # coarse assignment — de-windowed argmax (map-side combine); norms
-    # hoisted out of the ×16 crossJoin (similarity.norm: bit-identical,
+    # hoisted out of the ×16 crossJoin (similarity.norm_sql: bit-identical,
     # 3 folds per pair → 1 dot per pair + 1 norm per row).  All HOF
     # expressions build as SQL text (r16, dot_sql rationale): the
     # Column-API lambdas cost ~0.3 s of py4j round trips per build.
@@ -446,7 +424,7 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str, cb: DataFrame | None = None) -
         "subspace",
         "code",
         F.expr(
-            f"CAST(ROUND({_sq_dist_sql(_subvec_sql('pv'), 'cv')}, 9) AS DECIMAL(20,9))"
+            f"CAST(ROUND({sq_dist_sql(_subvec_sql('pv'), 'cv')}, 9) AS DECIMAL(20,9))"
         ).alias("pd2"),
     )
     # candidates = probed lists only (the IVF pruning), scored from
@@ -472,7 +450,7 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str, cb: DataFrame | None = None) -
         rerank.select(
             "probe_id",
             "vec_id",
-            F.expr(f"ROUND({_sq_dist_sql('pv', 'v')}, 6)").alias("exact_dist"),
+            F.expr(f"ROUND({sq_dist_sql('pv', 'v')}, 6)").alias("exact_dist"),
         )
         .withColumn("rank", F.row_number().over(wk))
         .where(F.col("rank") <= k_final)
@@ -497,7 +475,7 @@ _M = M_SUBSPACES
 
 
 def _sql_d2(a: str, b: str) -> str:
-    """DuckDB twin of ``_sq_dist``: the SAME left fold over (xᵢ-yᵢ)² —
+    """DuckDB twin of ``sq_dist_sql``: the SAME left fold over (xᵢ-yᵢ)² —
     list_reduce starts at element 1, Spark's aggregate at 0.0+el₁,
     identical float trajectories."""
     return (
@@ -507,7 +485,7 @@ def _sql_d2(a: str, b: str) -> str:
 
 
 def _sql_subv(v: str, s: str) -> str:
-    """DuckDB twin of ``_subvec``: 1-based inclusive list_slice of the
+    """DuckDB twin of ``_subvec_sql``: 1-based inclusive list_slice of the
     s-th D/m-dim subvector."""
     return (
         f"list_slice({v}, {s} * (len({v}) // {_M}) + 1, "
@@ -673,7 +651,7 @@ def sim_topk_pq_rerank_exact(spark, sf_dir):
         .join(e, "vec_id")
         .join(F.broadcast(probes), "probe_id")
     )
-    exact_d2 = F.expr(_sq_dist_sql("pv", "v"))
+    exact_d2 = F.expr(sq_dist_sql("pv", "v"))
     wk = Window.partitionBy("probe_id").orderBy(F.col("exact_dist").asc(), "vec_id")
     return (
         rerank.select("probe_id", "vec_id", F.round(exact_d2, 6).alias("exact_dist"))
@@ -795,8 +773,6 @@ def ml_ndcg_pq_adc(spark, sf_dir):
     the expensive half (brute force per probe) and is exactly what you
     run on a small probe panel to monitor a production index's
     recall/NDCG drift — |probes| · |corpus|, never corpus²."""
-    from etl_builder_spark.llm.similarity import cosine_sql
-
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v")).persist()
     cb = _pinned_codebook_from(e)
     codes = pq_encode(e, cb).select(

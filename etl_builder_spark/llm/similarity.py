@@ -1,8 +1,8 @@
 """Similarity search over the embedding column (SURVEY.md §2 I6-I8).
 
-- Brute-force cosine top-k: expression-only (zip_with + aggregate),
-  broadcast probe set — the exact baseline, O(n·k_probes), no shuffle
-  of the candidate side.
+- Brute-force cosine top-k: expression-only (SQL-text zip_with +
+  aggregate folds), broadcast probe set — the exact baseline,
+  O(n·k_probes), no shuffle of the candidate side.
 - LSH bucketed kNN (BucketedRandomProjectionLSH): the 100 TB path —
   candidates come only from colliding hash buckets.
 - Per-label centroids: posexplode → (label, dim) aggregate — a single
@@ -15,57 +15,45 @@ and every ranking orders by the ROUNDED value with vec_id tiebreak
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Expression-only dot product of two array<double> columns —
-    sequential left fold, JVM-side, no UDF."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
 def dot_sql(a: str, b: str) -> str:
-    """SQL-text twin of :func:`dot` for composing WIDE expression sets
-    (r15, guide §1.2 step 2): building N-bit/N-perm expression families
-    through the Column API costs thousands of py4j round trips per
-    query construction (measured ~1.5s for the 32-hyperplane signing
-    select at sf0.1 — pure driver time, paid on every build); one
-    parsed SQL string per output column is ~100x fewer crossings and
-    parses to the same Catalyst operators (`0.0D` is the double literal
-    F.lit(0.0) builds, the lambda shapes are identical)."""
+    """Dot product of two array<double> expressions as SQL text — a
+    sequential left fold, JVM-side, no UDF.  Every vector fold in the
+    package builds as parsed SQL text (r15/r16, guide §1.2 step 2): a
+    Column-API higher-order pair costs ~25 py4j round trips per query
+    construction (measured ~1.5s for the 32-hyperplane signing select
+    at sf0.1 — pure driver time, paid on every build); one parsed
+    string per output column is ~100x fewer crossings and yields the
+    same Catalyst operators (`0.0D` is the double literal)."""
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-
-
 def norm_sql(a: str) -> str:
-    """SQL-text twin of :func:`norm` (r16, the dot_sql rationale)."""
+    """sqrt(dot(a,a)) — the cosine denominator factor, exposed so hot
+    crossJoin sites can HOIST each side's norm to a per-row column
+    before the join (r15): inside cosine_sql both norms re-fold per
+    PAIR (3 array folds per candidate), while the hoisted form folds
+    each norm once per row and the pair pays one dot.
+    dot(a,b)/(norm(a)*norm(b)) is bit-identical to cosine(a,b) — the
+    same float ops on the same values in the same order — so rounded
+    similarities and every downstream ranking are unchanged (A/B at
+    sf0.1: coarse assignment 0.66 -> 0.45 s, rows identical)."""
     return f"sqrt({dot_sql(a, a)})"
 
 
 def cosine_sql(a: str, b: str) -> str:
-    """SQL-text twin of :func:`cosine` — same Divide/Multiply/Sqrt tree
-    over the same folds, one parse instead of ~6 lambda round trips."""
     return f"{dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)})"
 
 
-def norm(a: Column) -> Column:
-    """sqrt(dot(a,a)) — the cosine denominator factor, exposed so hot
-    crossJoin sites can HOIST each side's norm to a per-row column
-    before the join (r15, guide §1.2 step 2): inside cosine() both
-    norms re-fold per PAIR (3 array folds per candidate), while the
-    hoisted form folds each norm once per row and the pair pays one
-    dot.  dot(a,b)/(norm(a)*norm(b)) is bit-identical to cosine(a,b) —
-    the same float ops on the same values in the same order — so
-    rounded similarities and every downstream ranking are unchanged
-    (A/B at sf0.1: coarse assignment 0.66 -> 0.45 s, rows identical)."""
-    return F.sqrt(dot(a, a))
+def sq_dist_sql(a: str, b: str) -> str:
+    """Squared Euclidean distance: the same left fold over (xᵢ-yᵢ)²."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x - y), 0.0D, (acc, x) -> acc + x * x)"
 
 
 def _dbl(col: str = "embedding") -> Column:
@@ -101,9 +89,9 @@ def sim_topk_cosine_sql(spark, sf_dir):
     linearly with the candidate table."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", _dbl().alias("v"))
     # norms hoisted to per-row columns BEFORE the probe×candidate join
-    # (see norm()): each candidate folds its norm once instead of once
-    # per probe; the pair computes one dot — bit-identical similarity.
-    en = e.select("vec_id", "v", norm(F.col("v")).alias("nv"))
+    # (see norm_sql()): each candidate folds its norm once instead of
+    # once per probe; the pair computes one dot — bit-identical similarity.
+    en = e.select("vec_id", "v", F.expr(norm_sql("v")).alias("nv"))
     probes = en.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pv"), F.col("nv").alias("npv")
     )
@@ -113,9 +101,7 @@ def sim_topk_cosine_sql(spark, sf_dir):
         .select(
             "probe_id",
             F.col("vec_id").alias("cand_id"),
-            F.round(
-                dot(F.col("pv"), F.col("v")) / (F.col("npv") * F.col("nv")), 6
-            ).alias("sim"),
+            F.expr(f"ROUND({dot_sql('pv', 'v')} / (npv * nv), 6)").alias("sim"),
         )
     )
     w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), "cand_id")
@@ -270,14 +256,12 @@ def sim_rrf_fusion(spark, sf_dir):
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
     )
     j = vecs.join(F.broadcast(probes), F.col("vec_id") != F.col("probe_id"))
-    pv, v = F.col("pv"), F.col("v")
+    pp, pv, vv = dot_sql("pv", "pv"), dot_sql("pv", "v"), dot_sql("v", "v")
     sims = j.select(
         "probe_id",
         F.col("vec_id").alias("cand_id"),
-        F.round(dot(pv, v) / (F.sqrt(dot(pv, pv)) * F.sqrt(dot(v, v))), 6).alias(
-            "cos_sim"
-        ),
-        F.round(dot(pv, pv) - 2 * dot(pv, v) + dot(v, v), 6).alias("l2_sq"),
+        F.expr(f"ROUND({cosine_sql('pv', 'v')}, 6)").alias("cos_sim"),
+        F.expr(f"ROUND({pp} - 2 * {pv} + {vv}, 6)").alias("l2_sq"),
     )
     wc = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), "cand_id")
     wl = Window.partitionBy("probe_id").orderBy("l2_sq", "cand_id")

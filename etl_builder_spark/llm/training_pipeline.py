@@ -94,7 +94,8 @@ CASCADE_MIN_EQ = 8
 
 
 def _cascade_oracle() -> str:
-    from etl_builder_spark.llm.dedup import MINHASH_PERMS, _P
+    from etl_builder_spark.functions.sketches import CM_P, char_poly_hash_oracle
+    from etl_builder_spark.llm.dedup import MINHASH_PERMS
     from etl_builder_spark.llm.embed_dedup import (
         EMBED_DUP_TAU,
         PERTURB_DELTA,
@@ -146,23 +147,19 @@ def _cascade_oracle() -> str:
         ),
         sh_hash AS (
             SELECT doc_id,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                       list_transform(
-                           list_filter(string_split_regex(sh, ''), c -> c <> ''),
-                           c -> CAST(unicode(c) AS BIGINT))),
-                       (a, b) -> (a * 31 + b) % {_P}) AS h
+                   {char_poly_hash_oracle('sh')} AS h
             FROM shingles
         ),
         perms(i, a, b) AS (VALUES {perm_vals}),
         sig AS (
-            SELECT doc_id, i, MIN((a * h + b) % {_P}) AS minh
+            SELECT doc_id, i, MIN((a * h + b) % {CM_P}) AS minh
             FROM sh_hash CROSS JOIN perms GROUP BY doc_id, i
         ),
         bands AS (
             SELECT doc_id, i // 4 AS band,
                    SUM((minh * CASE i % 4 WHEN 0 THEN 1 WHEN 1 THEN 31
-                                          WHEN 2 THEN 961 ELSE 29791 END) % {_P})
-                       % {_P} AS bh
+                                          WHEN 2 THEN 961 ELSE 29791 END) % {CM_P})
+                       % {CM_P} AS bh
             FROM sig GROUP BY doc_id, band
         ),
         cand2 AS (
@@ -271,7 +268,7 @@ def pipeline_dedup_cascade(spark, sf_dir):
         SEM_CENT_LO,
         SEM_N_CENT,
     )
-    from etl_builder_spark.llm.similarity import _dbl, cosine
+    from etl_builder_spark.llm.similarity import _dbl, dot_sql, norm_sql
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < CASCADE_SLICE).select(
@@ -358,22 +355,16 @@ def pipeline_dedup_cascade(spark, sf_dir):
     # row_number sort over the ×16 broadcast expansion (same shape as
     # dedup_semantic_centroids / sim_knn_ivf_exact; the pq_encode
     # lesson, VERDICT r4 item 4).
-    # norms hoisted out of BOTH cosine pairings (similarity.norm —
+    # norms hoisted out of BOTH cosine pairings (similarity.norm_sql —
     # bit-identical; r15): the ×16 assignment crossJoin pays one dot
     # per pair, and nv rides the persisted assignment so the
     # within-cluster pair fan-out — the hot loop — pays one dot per
     # pair instead of three folds.
-    from etl_builder_spark.llm.similarity import dot as _dot
-    from etl_builder_spark.llm.similarity import norm as _norm
-
-    ev = evec.select("doc_id", "v", _norm(F.col("v")).alias("nv"))
-    cn = cent.select("cluster_id", "cv", _norm(F.col("cv")).alias("ncv"))
+    ev = evec.select("doc_id", "v", F.expr(norm_sql("v")).alias("nv"))
+    cn = cent.select("cluster_id", "cv", F.expr(norm_sql("cv")).alias("ncv"))
     asg = (
         ev.crossJoin(F.broadcast(cn))
-        .withColumn(
-            "negc",
-            -F.round(_dot(F.col("v"), F.col("cv")) / (F.col("nv") * F.col("ncv")), 6),
-        )
+        .withColumn("negc", F.expr(f"-ROUND({dot_sql('v', 'cv')} / (nv * ncv), 6)"))
         .groupBy("doc_id")
         .agg(
             F.min(F.struct(F.col("negc"), F.col("cluster_id"))).alias("b"),
@@ -393,10 +384,7 @@ def pipeline_dedup_cascade(spark, sf_dir):
     drops3 = (
         x.join(y, "cluster_id")
         .where(F.col("id_a") < F.col("id_b"))
-        .where(
-            F.round(_dot(F.col("xv"), F.col("yv")) / (F.col("nxv") * F.col("nyv")), 6)
-            >= EMBED_DUP_TAU
-        )
+        .where(F.expr(f"ROUND({dot_sql('xv', 'yv')} / (nxv * nyv), 6)") >= EMBED_DUP_TAU)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
     )

@@ -14,11 +14,21 @@ oracle.
 
 from __future__ import annotations
 
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from etl_builder_spark.registry import register
 from etl_builder_spark.session import load_table
+
+# The DataSource class is pickled into separate Python worker processes
+# that may not be able to import this package (their sys.path follows
+# the working directory, not the driver's sys.path).  Pickling this
+# module's classes by value ships their code with them, so both keys
+# work from any working directory.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 #: shard count — power of two so the shard filter is a bit mask
 PYDS_PARTS = 4

@@ -319,10 +319,10 @@ def test_simhash_exact_banding_equals_brute_force(spark):
     drop-one-word copies must dominate the matches."""
     import duckdb
 
+    from etl_builder_spark.functions.sketches import CM_P as _P
     from etl_builder_spark.llm.dedup import (
         PLANT_OFFSET,
         SIMHASH_PERMS,
-        _P,
         dedup_simhash_exact,
     )
     from tests.conftest import SF_DIR

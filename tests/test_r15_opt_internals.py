@@ -233,10 +233,11 @@ def test_kmeans_assignment_carries_vector_no_rejoin(spark):
 
 
 def test_hoisted_norm_cosine_bit_identical(spark):
-    """dot(a,b)/(norm(a)*norm(b)) must be BIT-identical to cosine(a,b)
-    — the hoist moves the same fold out of the pair loop without
-    changing a single float op — on the real embedding corpus."""
-    from etl_builder_spark.llm.similarity import _dbl, cosine, dot, norm
+    """dot_sql(a,b)/(norm_sql(a)*norm_sql(b)) must be BIT-identical to
+    cosine_sql(a,b) — the hoist moves the same fold out of the pair
+    loop without changing a single float op — on the real embedding
+    corpus."""
+    from etl_builder_spark.llm.similarity import _dbl, cosine_sql, dot_sql, norm_sql
     from etl_builder_spark.session import load_table
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
@@ -245,17 +246,15 @@ def test_hoisted_norm_cosine_bit_identical(spark):
     probes = e.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("probe_id"),
         F.col("v").alias("pv"),
-        norm(F.col("v")).alias("npv"),
+        F.expr(norm_sql("v")).alias("npv"),
     )
     pairs = F.broadcast(probes).join(
-        e.select("vec_id", "v", norm(F.col("v")).alias("nv")),
+        e.select("vec_id", "v", F.expr(norm_sql("v")).alias("nv")),
         F.col("vec_id") != F.col("probe_id"),
     )
     mismatch = pairs.where(
-        ~(
-            cosine(F.col("pv"), F.col("v")).eqNullSafe(
-                dot(F.col("pv"), F.col("v")) / (F.col("npv") * F.col("nv"))
-            )
+        ~F.expr(cosine_sql("pv", "v")).eqNullSafe(
+            F.expr(f"{dot_sql('pv', 'v')} / (npv * nv)")
         )
     ).count()
     assert mismatch == 0

@@ -8,10 +8,10 @@ parity suite already covers end-to-end values):
   would have selected — including the duplicated-threshold shape the
   ``single`` corpus caught during the round (ten equidepth bins all
   targeting rank 1 must not share one window partition);
-- the SQL-text expression twins (``dot_sql``/``norm_sql``/
-  ``cosine_sql``/``_sq_dist_sql``) evaluate bit-identically to their
-  Column-API builders on the real embedding corpus — the whole
-  construction-tax batch rests on "same Catalyst trees, one parse".
+- the SQL-text vector folds (``dot_sql``/``norm_sql``/``cosine_sql``/
+  ``sq_dist_sql``) evaluate bit-identically to a plain sequential
+  left fold on the real embedding corpus, and no other module grows a
+  second copy of them (or of the char-poly string hash).
 """
 
 from __future__ import annotations
@@ -77,19 +77,25 @@ def test_threshold_lookup_no_crossing_and_empty(spark):
     assert got_empty == {"any": (None, None)}
 
 
+def _left_fold(a, b, term):
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + term(x, y)
+    return acc
+
+
 def test_sql_text_twins_bit_identical(spark):
-    """dot_sql/norm_sql/cosine_sql/_sq_dist_sql parse to expressions
-    that evaluate bit-identically to the Column-API forms on the real
-    corpus (eqNullSafe sweep, zero tolerance)."""
-    from etl_builder_spark.llm.pq import _sq_dist, _sq_dist_sql
+    """dot_sql/norm_sql/cosine_sql/sq_dist_sql evaluate bit-identically
+    to a pure-Python sequential left fold (IEEE doubles, same op order)
+    over the collected real corpus — zero tolerance."""
+    import math
+
     from etl_builder_spark.llm.similarity import (
         _dbl,
-        cosine,
         cosine_sql,
-        dot,
         dot_sql,
-        norm,
         norm_sql,
+        sq_dist_sql,
     )
     from etl_builder_spark.session import load_table
 
@@ -99,14 +105,58 @@ def test_sql_text_twins_bit_identical(spark):
     probes = e.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
     )
-    pairs = F.broadcast(probes).join(e, F.col("vec_id") != F.col("probe_id"))
-    mismatch = pairs.where(
-        ~dot(F.col("pv"), F.col("v")).eqNullSafe(F.expr(dot_sql("pv", "v")))
-        | ~norm(F.col("v")).eqNullSafe(F.expr(norm_sql("v")))
-        | ~cosine(F.col("pv"), F.col("v")).eqNullSafe(F.expr(cosine_sql("pv", "v")))
-        | ~_sq_dist(F.col("pv"), F.col("v")).eqNullSafe(F.expr(_sq_dist_sql("pv", "v")))
-    ).count()
-    assert mismatch == 0
+    rows = (
+        F.broadcast(probes)
+        .join(e, F.col("vec_id") != F.col("probe_id"))
+        .select(
+            "pv",
+            "v",
+            F.expr(dot_sql("pv", "v")).alias("dot"),
+            F.expr(norm_sql("v")).alias("norm"),
+            F.expr(cosine_sql("pv", "v")).alias("cos"),
+            F.expr(sq_dist_sql("pv", "v")).alias("d2"),
+        )
+        .collect()
+    )
+    assert rows
+
+    def dot(a, b):
+        return _left_fold(a, b, lambda x, y: x * y)
+
+    for r in rows:
+        pv, v = r["pv"], r["v"]
+        assert r["dot"] == dot(pv, v)
+        assert r["norm"] == math.sqrt(dot(v, v))
+        assert r["cos"] == dot(pv, v) / (math.sqrt(dot(pv, pv)) * math.sqrt(dot(v, v)))
+        assert r["d2"] == _left_fold(pv, v, lambda x, y: (x - y) * (x - y))
+
+
+def test_no_vector_fold_or_char_hash_outside_its_home():
+    """Pure-text guard: the vector folds live only in llm/similarity.py
+    and the char-poly string hash and its prime only in
+    functions/sketches.py — a copied vector fold (Column-API or SQL
+    text), a second prime literal or another ascii(c) hash fold
+    elsewhere fails here."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "etl_builder_spark"
+    # Column-API or SQL-text form of an aggregate-over-zip_with fold
+    fold = re.compile(r"\b(F\.)?aggregate\(\s*(F\.)?zip_with\(")
+    prime = re.compile(r"\b1_?000_?000_?007\b")
+    char_hash = re.compile(r"ascii\(c\)")
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        text = path.read_text()
+        if rel != "llm/similarity.py" and fold.search(text):
+            offenders.append((rel, "aggregate(zip_with( vector fold"))
+        if rel != "functions/sketches.py":
+            if prime.search(text):
+                offenders.append((rel, "1_000_000_007 literal"))
+            if char_hash.search(text):
+                offenders.append((rel, "ascii(c) hash fold"))
+    assert offenders == []
 
 
 def test_winsorized_windows_share_one_exchange(spark):

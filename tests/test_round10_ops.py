@@ -133,7 +133,8 @@ def test_minhash_calibration_matches_python_reference(spark):
     candidate pairs, exact Jaccard — must reproduce every bin."""
     from collections import defaultdict
 
-    from etl_builder_spark.llm.dedup import _P, MINHASH_PERMS, PLANT_OFFSET
+    from etl_builder_spark.functions.sketches import CM_P as _P
+    from etl_builder_spark.llm.dedup import MINHASH_PERMS, PLANT_OFFSET
 
     out = {
         r["n_eq"]: r

@@ -115,6 +115,54 @@ def test_python_datasource_roundtrip_and_plan(spark):
     assert "etl_docs_pyds" in plan
 
 
+def test_python_datasource_keys_from_any_working_directory(tmp_path):
+    """Both DataSource keys must work when the engine is imported from
+    outside the repo root: the Python workers that unpickle the
+    connector class follow their own working directory, not the
+    driver's sys.path, so a by-reference pickle of the class fails
+    there with PYTHON_DATA_SOURCE_ERROR.  Runs in a fresh small session
+    whose working directory is a temp dir and whose package import
+    comes only from a sys.path insert."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    script = f"""
+import json, sys
+sys.path.insert(0, {repo!r})
+from etl_builder_spark.registry import REGISTRY, _ensure_loaded
+from etl_builder_spark.session import get_spark
+_ensure_loaded()
+spark = get_spark("pyds-any-cwd", shuffle_partitions=4)
+out = {{}}
+for key in ("scan_python_datasource", "scan_python_datasource_pushdown"):
+    out[key] = [list(r) for r in REGISTRY[key].fn(spark, {SF_DIR!r}).collect()]
+spark.stop()
+print("ROWS " + json.dumps(out))
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    line = next(x for x in proc.stdout.splitlines() if x.startswith("ROWS "))
+    got = json.loads(line[len("ROWS "):])
+    sel = f"SELECT doc_id, lang, n_chars FROM read_parquet('{SF_DIR}/documents.parquet')"
+    want_all = duckdb.sql(f"{sel} ORDER BY doc_id").fetchall()
+    want_200 = duckdb.sql(f"{sel} WHERE doc_id < 200 ORDER BY doc_id").fetchall()
+    assert [tuple(r) for r in got["scan_python_datasource"]] == want_all
+    assert [tuple(r) for r in got["scan_python_datasource_pushdown"]] == want_200
+
+
 def test_parameterized_sql_binds_as_typed_literals(spark):
     """The bound plan must be semantically identical to the literal
     plan (the docstring's parse-time-binding claim), and the census
